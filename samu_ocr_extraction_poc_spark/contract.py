@@ -532,10 +532,11 @@ FROM (SELECT DISTINCT doc_id FROM sig WHERE doc_id % 5 = 0) s LEFT JOIN ihit USI
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: minhash-LSH pairs -> distributed connected
     components (operators/dedup.py:connected_components, min-label
-    propagation) -> cluster sizes. The end-to-end dedup story: candidates,
-    clusters, one canonical (min doc_id = the component label) per
-    cluster. The oracle computes the same min over the transitive closure
-    with a recursive CTE."""
+    propagation; every round is a flat checkpoint materialized by its
+    one convergence aggregate) -> cluster sizes. The end-to-end dedup
+    story: candidates, clusters, one canonical (min doc_id = the component
+    label) per cluster. The oracle computes the same min over the
+    transitive closure with a recursive CTE."""
     sig = DD.minhash_signatures(_t(spark, sf_dir, "documents"), num_hashes=8, k=3)
     pairs = DD.lsh_candidate_pairs(sig, num_hashes=8, rows_per_band=2)
     cc = DD.connected_components(pairs)
@@ -2180,10 +2181,11 @@ def bpe_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_train_long_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training long enough that the lineage-truncation path fires
     under the driver gate (VERDICT r4 item 6): 24 merge rounds with the
-    default ``checkpoint_every=16``, so round 16 localCheckpoint(eager)s
-    the vocabulary frame mid-training and rounds 17-24 build on the
-    truncated lineage — the exact mechanism that keeps Catalyst analysis
-    cost bounded at production merge counts (operators/bpe.py:120). The
+    16-round ``_CHECKPOINT_EVERY`` cadence, so round 16
+    localCheckpoint(eager)s the vocabulary frame mid-training (releasing
+    the word table it replaces) and rounds 17-24 build on the truncated
+    lineage — the exact mechanism that keeps Catalyst analysis cost
+    bounded at production merge counts (operators/bpe.py:bpe_train). The
     oracle unrolls the same 24 rounds in DuckDB; values are integer
     counts + symbol strings, so parity is exact by construction."""
     from .operators import bpe as BP

@@ -1025,7 +1025,6 @@ def keep_canonical(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    use_star: bool = True,
 ) -> DataFrame:
     """APPLY near-dup dedup to the corpus: cluster the candidate pairs
     (connected components) and keep exactly one document per cluster — the
@@ -1036,12 +1035,12 @@ def keep_canonical(
     Plan shape at scale: the drop-list (clustered non-minima) is tiny
     relative to the corpus — one left_anti join against it; no shuffle of
     the corpus beyond that join (AQE broadcasts the drop side when it
-    fits). The star-contraction clusterer is the default (O(log n) rounds
-    and measured faster wall-clock than min-label's O(diameter) at every
-    sandbox sf; both backends are pinned to agree and share one oracle).
-    Returns the surviving input rows, all columns.
+    fits). Clusters come from the star-contraction clusterer (O(log n)
+    rounds and measured faster wall-clock than min-label's O(diameter) at
+    every sandbox sf; the two clusterers are pinned to agree and share one
+    oracle). Returns the surviving input rows, all columns.
     """
-    cc = (connected_components_star if use_star else connected_components)(pairs)
+    cc = connected_components_star(pairs)
     drop = cc.where(F.col("doc_id") != F.col("component")).select(
         F.col("doc_id").alias(id_col)
     )
@@ -1066,6 +1065,51 @@ def _release_frame(df: DataFrame) -> None:
         pass  # best-effort; worst case the old behavior (cleaner-reclaimed)
 
 
+def _fixpoint(base, step, measure, max_iter, name, stats):
+    """The one round shape of the connected-components loops: each round
+    is ``step(cur).localCheckpoint(eager=False)``, and ``measure(frame) ->
+    (key, done)`` runs the round's single aggregate job, which both
+    materializes the checkpoint and decides convergence. Only then is the
+    superseded frame released, so at most two flat frames are live. The
+    loop stops when ``done`` or the key repeats; ``base`` is measured first
+    (a base that is already done runs zero rounds).
+
+    Flattening EVERY round keeps each round's plan O(1): with persisted
+    rounds and a checkpoint every 8th, ~90% of min-label's wall was query
+    planning between jobs (a 31-round graph on a 4-core host: 147 s
+    persisted, 21 s flattened).
+
+    Returns the final flat frame, which the caller owns. On any exception
+    — including the RuntimeError raised when ``max_iter`` rounds do not
+    converge (a chain longer than max_iter would otherwise split into
+    bogus components) — every live frame, ``base`` included, is released.
+    """
+    cur, nxt = base, None
+    try:
+        key, done = measure(cur)
+        rounds = 0
+        while not done:
+            if rounds == max_iter:
+                raise RuntimeError(
+                    f"{name} did not converge in {max_iter} rounds; raise max_iter"
+                )
+            nxt = step(cur).localCheckpoint(eager=False)
+            nxt_key, done = measure(nxt)
+            _release_frame(cur)
+            cur, nxt = nxt, None
+            rounds += 1
+            done = done or nxt_key == key
+            key = nxt_key
+        if stats is not None:
+            stats["rounds"] = rounds
+        out, cur = cur, None
+        return out
+    finally:
+        for f in (cur, nxt):
+            if f is not None:
+                _release_frame(f)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -1082,9 +1126,12 @@ def connected_components(
     engine-replayable — the DuckDB oracle computes the same min over the
     transitive closure).
 
-    Per-round cache discipline mirrors kmeans_assign: persist + materialize
-    the new label frame, then release the previous one — O(1) cached frames
-    however many rounds run. Early-exits when a round changes nothing.
+    Rounds run through :func:`_fixpoint`: every round's label frame is a
+    flat checkpoint materialized by the round's convergence aggregate, and
+    the previous one is released — O(1) cached frames however many rounds
+    run. Stops when a round changes nothing; raises RuntimeError after
+    ``max_iter`` rounds. The returned frame is the last round's checkpoint,
+    renamed (no extra copy).
 
     Returns (doc_id, component).
     """
@@ -1094,7 +1141,7 @@ def connected_components(
     # shingle explode, band self-join). A persist caches DATA but analysis/
     # optimization still walks the full tree once per reference, so the
     # FIRST round paid ~2 s of pure Catalyst planning at sandbox scale; a
-    # flat LogicalRDD base makes every round's plan O(round) (r6, guide
+    # flat LogicalRDD base makes every round's plan O(1) (r6, guide
     # §3.3: planning time itself can become the bottleneck).
     edges = (
         directed.union(
@@ -1103,83 +1150,45 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    labels = (
+    labels0 = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
+
+    def _step(labels: DataFrame) -> DataFrame:
+        neigh = edges.join(
+            labels.withColumnRenamed("id", "dst"), "dst"
+        ).select(F.col("src").alias("id"), "label")
+        return (
+            labels.unionByName(neigh)
+            .groupBy("id")
+            .agg(F.min("label").alias("label"))
+        )
+
     # labels only ever DECREASE under min-propagation, so sum(label) is a
     # strictly-decreasing convergence measure: one aggregate job per round
-    # both materializes the persisted frame and detects the fixpoint (a
+    # both materializes the checkpoint and detects the fixpoint (a
     # separate changed-rows join would double the per-round job count).
     # The sum runs in DECIMAL(38,0): with 64-bit ids at 10^9+ vertices a
     # BIGINT sum can overflow (ANSI-mode throw, or a silent wrap where a
     # collision could falsely signal convergence — ADVICE r2); 38 digits
     # hold sum(2^63 * 10^12) with room to spare.
     label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
-    #
-    # Persisting caches DATA but the LOGICAL plan still nests one
-    # join+union per round — past ~25 rounds (long-chain graphs) Catalyst's
-    # tree blows the JVM stack. Every checkpoint_every rounds the frame is
-    # localCheckpoint(eager)-ed instead, which truncates the lineage; the
-    # superseded checkpoint blocks are released by Spark's ContextCleaner
-    # once dereferenced, so live cached frames stay O(1).
-    checkpoint_every = 8
-    prev_sum = labels.agg(label_sum).collect()[0][0]
-    converged = False
-    for it in range(max_iter):
-        neigh = edges.join(
-            labels.withColumnRenamed("id", "dst"), "dst"
-        ).select(F.col("src").alias("id"), "label")
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
+    try:
+        labels = _fixpoint(
+            labels0,
+            _step,
+            lambda f: (f.agg(label_sum).collect()[0][0], False),
+            max_iter,
+            "connected_components",
+            stats,
         )
-        if (it + 1) % checkpoint_every == 0:
-            # eager=False: the convergence aggregate below is the round's
-            # materializing action — it computes AND caches the checkpoint
-            # RDD in one job instead of a count job followed by the agg job
-            # (r6: one scheduled job per round, not two)
-            new_labels = new_labels.localCheckpoint(eager=False)
-        else:
-            new_labels = new_labels.persist()
-        new_sum = new_labels.agg(label_sum).collect()[0][0]
-        _release_frame(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            if stats is not None:
-                stats["rounds"] = it + 1
-            break
-        prev_sum = new_sum
-    if not converged:
-        # falling off the loop would silently return WRONG components (a
-        # chain longer than max_iter splits into bogus pieces) — fail loud.
-        # _release_frame, not plain unpersist (r6 review): unpersist is a
-        # no-op for the localCheckpoint-ed edges, and the last round's
-        # labels would otherwise stay pinned across the caller's
-        # raise-max_iter retry.
-        _release_frame(labels)
+    finally:
         _release_frame(edges)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter); raise max_iter"
-        )
-    # eager localCheckpoint (r6): the persisted labels frame still CARRIES
-    # the whole loop's logical lineage (~2 Exchanges x rounds nested — the
-    # r6 plan diff counted 694 Exchange nodes in the nominal final plan),
-    # so every downstream action re-paid Catalyst analysis of the full
-    # loop tree before hitting the cache. The flat LogicalRDD hand-off is
-    # the same discipline the star variant and kmeans_assign already use;
-    # it also lets the loop's own frames be released here instead of
-    # leaking the last round's cache into the caller.
-    out = labels.select(
+    return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("component")
-    ).localCheckpoint(eager=True)
-    _release_frame(labels)
-    _release_frame(edges)
-    return out
+    )
 
 
 def connected_components_star(
@@ -1225,21 +1234,20 @@ def connected_components_star(
     already a star forest runs zero rounds). The multiset fingerprint
     (count + decimal(38,0) sum of a 48-bit md5 prefix per edge) is kept as
     a secondary stop so a hypothetical forest-test gap degrades to the old
-    behavior instead of looping. Cache discipline: O(1) live frames, and
-    the lineage is localCheckpoint-truncated EVERY round — a star round
+    behavior instead of looping. Rounds run through :func:`_fixpoint`
+    (O(1) live frames, lineage flattened EVERY round) — a star round
     references the previous frame ~4 times (the adjacency union reads it
     twice, small-star joins the large-star output against its own
-    aggregate), so persist-only rounds grow the logical plan ~4^rounds and
-    OOM Catalyst/AQE's plan stringification within a handful of rounds
-    (min-label's 2 references/round tolerates persist between checkpoints;
-    this does not).
+    aggregate), so persist-only rounds would grow the logical plan
+    ~4^rounds and OOM Catalyst/AQE's plan stringification within a handful
+    of rounds.
 
     Returns (doc_id, component).
     """
 
     def _round_stats(e: DataFrame):
         """ONE aggregate job: materializes ``e`` (eager=False checkpoint
-        upstream) and returns (n, h, is_forest). Stacks each edge into
+        upstream) and returns ((n, h), is_forest). Stacks each edge into
         (side, node, other) rows and aggregates per node first (partial-
         aggregable, no Expand — a count-distinct formulation planned an
         Expand plus an extra exchange and cost more than the round it
@@ -1281,7 +1289,7 @@ def connected_components_star(
             ).alias("bad"),
         ).collect()[0]
         is_forest = (row["bad"] or 0) == 0
-        return row["n"] or 0, row["h"], is_forest
+        return (row["n"] or 0, row["h"]), is_forest
 
     def _large_star(e: DataFrame) -> DataFrame:
         adj = e.unionByName(
@@ -1319,7 +1327,7 @@ def connected_components_star(
     # 4 copies of the caller's entire upstream plan (scan -> shingles ->
     # band self-join) — measured ~1.9 s of pure driver planning at sf0.1
     # before a single task ran. The flat LogicalRDD base keeps every
-    # round's plan bounded (guide §3.3). The fingerprint aggregate below
+    # round's plan bounded (guide §3.3). The first round-stats aggregate
     # is the materializing action (eager=False: no separate count job).
     edges0 = (
         pairs.select(
@@ -1340,48 +1348,29 @@ def connected_components_star(
     # below. (Had a vertex been able to vanish, the old coalesce-to-self
     # would have mislabeled it as its own component — the oracle-green
     # history is itself evidence of preservation.)
-    prev_n, prev_h, is_forest = _round_stats(edges0)
-    if stats is not None:
-        stats["rounds"] = 0
-    edges = edges0
-    converged = is_forest
-    if not converged:
-        for it in range(max_iter):
-            # eager=False: the round-stats aggregate is the round's
-            # materializing action — one scheduled job per round instead
-            # of a checkpoint-count job plus the aggregate job (the
-            # previous frame is only released after this aggregate has
-            # run, so the new frame's checkpoint data is in place first)
-            new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-            cur_n, cur_h, is_forest = _round_stats(new_edges)
-            _release_frame(edges)
-            edges = new_edges
-            if is_forest or (cur_n, cur_h) == (prev_n, prev_h):
-                converged = True
-                if stats is not None:
-                    stats["rounds"] = it + 1
-                break
-            prev_n, prev_h = cur_n, cur_h
-    if not converged:
-        _release_frame(edges)
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds; "
-            "raise max_iter (expected O(log n) rounds)"
-        )
+    edges = _fixpoint(
+        edges0,
+        lambda e: _small_star(_large_star(e)),
+        _round_stats,
+        max_iter,
+        "connected_components_star",
+        stats,
+    )
     # star forest read-off: non-minimum vertices appear as src exactly
     # once, pointing at the component min; minima appear only as dst and
     # label themselves. A union of the edge list with the distinct-dst
     # self-rows replaces the old full-vertex-set left join (one distinct
     # over the small forest instead of a distinct over 2x the input edges
     # plus a join).
-    out = (
-        edges.select(F.col("src").alias("doc_id"), F.col("dst").alias("component"))
-        .unionByName(
-            edges.select(F.col("dst").alias("doc_id"))
-            .distinct()
-            .select("doc_id", F.col("doc_id").alias("component"))
+    try:
+        return (
+            edges.select(F.col("src").alias("doc_id"), F.col("dst").alias("component"))
+            .unionByName(
+                edges.select(F.col("dst").alias("doc_id"))
+                .distinct()
+                .select("doc_id", F.col("doc_id").alias("component"))
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    _release_frame(edges)
-    return out
+    finally:
+        _release_frame(edges)

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .corpus import _md5_bucket
+from .dedup import _release_frame
 
 PR_SCALE = 10**12
 
@@ -58,6 +59,8 @@ def synth_link_graph(
     # distinct+count job saved; value-identical by definition)
     if n is None:
         n = nodes.select(id_col).distinct().count()
+    elif n <= 0:
+        raise ValueError(f"synth_link_graph: n must be positive, got {n}")
     ids = nodes.select(F.col(id_col).cast("bigint").alias("src")).distinct()
     raw = ids.select(
         "src", F.explode(F.sequence(F.lit(1), F.lit(n_links))).alias("j")
@@ -127,6 +130,9 @@ def pagerank(
     )
     if n is None:
         n = node_t.count()
+    if n <= 0:
+        _release_frame(node_t)
+        raise ValueError(f"pagerank needs a non-empty node set, got n={n}")
     teleport = ((100 - damping_pct) * (scale // n)) // 100
     # A checkpointed LogicalRDD carries NO size statistics, so without a
     # hint every per-iteration join planned as SortMergeJoin (16 extra
@@ -134,11 +140,13 @@ def pagerank(
     # observed as SMJ 0->16 in the r6 plan diff). The rank/degree/share
     # tables are all <= n rows; gate an explicit broadcast on the SAME
     # size logic the planner would apply if it had stats (~64 bytes/row
-    # vs the 10 MB autoBroadcastJoinThreshold). Above the bound the joins
-    # stay sort-merge — at 10^9 nodes broadcasting ranks would be wrong,
-    # and n is already collected for the teleport term, so the gate costs
-    # nothing extra.
-    _bcast = n * 64 < 10 * 1024 * 1024
+    # vs the session's autoBroadcastJoinThreshold; a threshold <= 0
+    # disables broadcasting, and then no hint is forced either). Above the
+    # bound the joins stay sort-merge — at 10^9 nodes broadcasting ranks
+    # would be wrong, and n is already collected for the teleport term, so
+    # the gate costs nothing extra.
+    sql_conf = nodes.sparkSession._jsparkSession.sessionState().conf()
+    _bcast = n * 64 < sql_conf.autoBroadcastJoinThreshold()
     _hint = F.broadcast if _bcast else (lambda d: d)
     # All joins below are name-based using-joins on freshly-aliased
     # columns: from iteration 2 the ranks lineage contains the edge

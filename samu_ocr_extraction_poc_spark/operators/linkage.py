@@ -129,6 +129,15 @@ def blocked_link_pairs(records: DataFrame, threshold: int = DEFAULT_THRESHOLD) -
     is_true = 1 iff the pair's ground-truth entity ids agree (available
     because the records are synthesised; a production caller drops it).
     """
+    def pass_pairs(keyed: DataFrame) -> DataFrame:
+        a = keyed.select(F.col("bk"), F.col("rec_id").alias("rec_a"))
+        b = keyed.select(F.col("bk"), F.col("rec_id").alias("rec_b"))
+        return (
+            a.join(b, "bk")
+            .where(F.col("rec_a") < F.col("rec_b"))
+            .select("rec_a", "rec_b")
+        )
+
     # materialize the record table ONCE (r6): it is read by four plan
     # branches (both blocking passes and both sides of the scoring join),
     # and for the synthesised caller each branch re-ran the ~6-md5-per-row
@@ -143,63 +152,54 @@ def blocked_link_pairs(records: DataFrame, threshold: int = DEFAULT_THRESHOLD) -
 
     r = records.select("rec_id", "entity_id", "name_digits", "nationkey",
                        "cents", "segment").localCheckpoint(eager=True)
-
-    def pass_pairs(keyed: DataFrame) -> DataFrame:
-        a = keyed.select(F.col("bk"), F.col("rec_id").alias("rec_a"))
-        b = keyed.select(F.col("bk"), F.col("rec_id").alias("rec_b"))
-        return (
-            a.join(b, "bk")
-            .where(F.col("rec_a") < F.col("rec_b"))
-            .select("rec_a", "rec_b")
+    try:
+        pass_a = pass_pairs(
+            r.select(F.substring("name_digits", 4, 6).alias("bk"), "rec_id")
         )
-
-    pass_a = pass_pairs(
-        r.select(F.substring("name_digits", 4, 6).alias("bk"), "rec_id")
-    )
-    pass_b = pass_pairs(
-        r.select(
-            F.concat(
-                F.col("nationkey").cast("string"),
-                F.lit("|"),
-                F.expr("cents DIV 10000").cast("string"),
-            ).alias("bk"),
-            "rec_id",
+        pass_b = pass_pairs(
+            r.select(
+                F.concat(
+                    F.col("nationkey").cast("string"),
+                    F.lit("|"),
+                    F.expr("cents DIV 10000").cast("string"),
+                ).alias("bk"),
+                "rec_id",
+            )
         )
-    )
-    cand = pass_a.union(pass_b).distinct()
+        cand = pass_a.union(pass_b).distinct()
 
-    ra = r.select(*[F.col(c).alias(f"{c}_a") for c in r.columns])
-    rb = r.select(*[F.col(c).alias(f"{c}_b") for c in r.columns])
-    scored = (
-        cand.join(ra, cand.rec_a == ra.rec_id_a)
-        .join(rb, cand.rec_b == rb.rec_id_b)
-        .select(
-            "rec_a",
-            "rec_b",
-            (
-                F.when(F.col("name_digits_a") == F.col("name_digits_b"),
-                       W_NAME_EXACT)
-                .when(F.substring("name_digits_a", 4, 6)
-                      == F.substring("name_digits_b", 4, 6), W_NAME_SUFFIX)
-                .otherwise(W_NAME_DIFF)
-                + F.when(F.col("nationkey_a") == F.col("nationkey_b"),
-                         W_NATION_EQ).otherwise(W_NATION_DIFF)
-                + F.when(
-                    F.abs(F.col("cents_a") - F.col("cents_b"))
-                    <= BAL_CLOSE_CENTS, W_BAL_CLOSE
-                ).otherwise(W_BAL_FAR)
-                + F.when(
-                    F.col("segment_a").isNull() | F.col("segment_b").isNull(),
-                    0,
-                )
-                .when(F.col("segment_a") == F.col("segment_b"), W_SEG_EQ)
-                .otherwise(W_SEG_DIFF)
-            ).cast("bigint").alias("score"),
-            (F.col("entity_id_a") == F.col("entity_id_b"))
-            .cast("bigint")
-            .alias("is_true"),
+        ra = r.select(*[F.col(c).alias(f"{c}_a") for c in r.columns])
+        rb = r.select(*[F.col(c).alias(f"{c}_b") for c in r.columns])
+        scored = (
+            cand.join(ra, cand.rec_a == ra.rec_id_a)
+            .join(rb, cand.rec_b == rb.rec_id_b)
+            .select(
+                "rec_a",
+                "rec_b",
+                (
+                    F.when(F.col("name_digits_a") == F.col("name_digits_b"),
+                           W_NAME_EXACT)
+                    .when(F.substring("name_digits_a", 4, 6)
+                          == F.substring("name_digits_b", 4, 6), W_NAME_SUFFIX)
+                    .otherwise(W_NAME_DIFF)
+                    + F.when(F.col("nationkey_a") == F.col("nationkey_b"),
+                             W_NATION_EQ).otherwise(W_NATION_DIFF)
+                    + F.when(
+                        F.abs(F.col("cents_a") - F.col("cents_b"))
+                        <= BAL_CLOSE_CENTS, W_BAL_CLOSE
+                    ).otherwise(W_BAL_FAR)
+                    + F.when(
+                        F.col("segment_a").isNull() | F.col("segment_b").isNull(),
+                        0,
+                    )
+                    .when(F.col("segment_a") == F.col("segment_b"), W_SEG_EQ)
+                    .otherwise(W_SEG_DIFF)
+                ).cast("bigint").alias("score"),
+                (F.col("entity_id_a") == F.col("entity_id_b"))
+                .cast("bigint")
+                .alias("is_true"),
+            )
         )
-    )
-    out = scored.where(F.col("score") >= threshold).localCheckpoint(eager=True)
-    _release_frame(r)
-    return out
+        return scored.where(F.col("score") >= threshold).localCheckpoint(eager=True)
+    finally:
+        _release_frame(r)

@@ -6,6 +6,7 @@ graph-shaping rules."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from samu_ocr_extraction_poc_spark.operators import graph as GR
@@ -109,6 +110,45 @@ def test_pagerank_checkpoint_path_identical(spark):
         for r in GR.pagerank(nodes, edges, iterations=6, checkpoint_every=0).collect()
     }
     assert a == b
+
+
+def test_pagerank_broadcast_hint_follows_session_threshold(spark):
+    """The broadcast hint on the flat rank/degree tables is gated on the
+    session's autoBroadcastJoinThreshold: forced under the default, never
+    when broadcasting is disabled (<= 0) — with identical ranks."""
+    nodes = spark.createDataFrame([(i,) for i in range(20)], "doc_id long")
+    edges = GR.synth_link_graph(nodes, n_links=3).localCheckpoint(eager=True)
+
+    def run():
+        ranks = GR.pagerank(nodes, edges, iterations=3)
+        plan = ranks._jdf.queryExecution().optimizedPlan().toString()
+        return "strategy=broadcast" in plan, sorted(map(tuple, ranks.collect()))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    hinted, want = run()
+    try:
+        spark.conf.set(key, "-1")
+        hinted_off, got = run()
+    finally:
+        spark.conf.set(key, old)
+    assert hinted and not hinted_off
+    assert got == want
+
+
+def test_pagerank_and_synth_reject_nonpositive_n(spark):
+    """A degenerate node count fails loud instead of a ZeroDivisionError or
+    a silently corrupt teleport term / md5 target range."""
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    for bad in (0, -3):
+        with pytest.raises(ValueError):
+            GR.pagerank(nodes, edges, n=bad)
+        with pytest.raises(ValueError):
+            GR.synth_link_graph(nodes, n=bad)
+    # an empty node set is n == 0 too
+    with pytest.raises(ValueError):
+        GR.pagerank(nodes.where("doc_id < 0"), edges)
 
 
 def _py_triangles(und_edges):
